@@ -82,31 +82,25 @@ object Bloom {
     * structure fails in the one direction CRCs exist for: a flipped bit
     * yields false negatives, and a pruned chunk is never decoded so its
     * whole-chunk CRC is never consulted. Probes verify the embedded CRC
-    * before trusting a zero bit. Legacy headerless filters (length an
-    * exact multiple of the block size; the header's `5 + 32k` length can
-    * never be) still probe, unverified. */
+    * before trusting a zero bit. */
   private final val Magic = 0xB7
   private final val HeaderBytes = 5
 
-  /** Probe the serialized (little-endian) filter, verifying the embedded
-    * CRC when the filter carries one. Throws on CRC mismatch — corrupted
-    * pruning metadata must fail loudly, not silently drop chunks. */
+  /** Probe the serialized (little-endian) filter after verifying its
+    * embedded CRC. Throws on CRC mismatch — corrupted pruning metadata
+    * must fail loudly, not silently drop chunks. A missing filter, or
+    * bytes without the magic-plus-CRC header, cannot prune: `true`. */
   def mightContain(bytes: Array[Byte], v: Int): Boolean = {
-    if (bytes == null || bytes.length < BytesPerBlock) return true // no filter => can't prune
-    var off0 = 0
-    var len = bytes.length
-    if ((bytes(0) & 0xFF) == Magic && (bytes.length - HeaderBytes) % BytesPerBlock == 0 &&
-      bytes.length > HeaderBytes) {
-      val crc = new java.util.zip.CRC32()
-      crc.update(bytes, HeaderBytes, bytes.length - HeaderBytes)
-      val stored = (bytes(1) & 0xFFL) | ((bytes(2) & 0xFFL) << 8) |
-        ((bytes(3) & 0xFFL) << 16) | ((bytes(4) & 0xFFL) << 24)
-      require(crc.getValue == stored, "bloom filter CRC mismatch")
-      off0 = HeaderBytes
-      len = bytes.length - HeaderBytes
-    } else if (bytes.length % BytesPerBlock != 0) return true // unrecognized => can't prune
+    if (bytes == null || bytes.length <= HeaderBytes || (bytes(0) & 0xFF) != Magic ||
+      (bytes.length - HeaderBytes) % BytesPerBlock != 0) return true
+    val len = bytes.length - HeaderBytes
+    val crc = new java.util.zip.CRC32()
+    crc.update(bytes, HeaderBytes, len)
+    val stored = (bytes(1) & 0xFFL) | ((bytes(2) & 0xFFL) << 8) |
+      ((bytes(3) & 0xFFL) << 16) | ((bytes(4) & 0xFFL) << 24)
+    require(crc.getValue == stored, "bloom filter CRC mismatch")
     val h = hashInt(v)
-    val blockOff = off0 + blockIndex(h, len / BytesPerBlock) * BytesPerBlock
+    val blockOff = HeaderBytes + blockIndex(h, len / BytesPerBlock) * BytesPerBlock
     val x = h.toInt
     var i = 0
     while (i < WordsPerBlock) {

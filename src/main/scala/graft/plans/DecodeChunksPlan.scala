@@ -127,9 +127,12 @@ object GraftStrategy extends SparkStrategy {
 /** Columnar decode for GENERIC (any-schema) chunk tables: output/
   * colIndices/colTypes are parallel — each output attribute decodes the
   * chunk column at its index. The child is the projected chunk metadata
-  * (num_rows, chunk_id, col_crcs, cols_bin); the per-column payloads
-  * live inside ONE array column, so projection saves decode CPU and CRC
-  * work, not parquet bytes (the documented generic-format trade-off). */
+  * (num_rows, chunk_id, col_crcs) plus one `bin_<i>` payload column per
+  * decoded column. Persisted tables store the payloads that way, so
+  * projection skips the unread columns' parquet bytes; an in-memory
+  * chunk dataset's `cols_bin` array is projected to the same `bin_<i>`
+  * columns before the node (GenericEncode), so this node, its rules and
+  * its iterator know one payload layout. */
 case class DecodeGenericChunks(output: Seq[Attribute], colIndices: Seq[Int],
                                colTypes: Seq[String], child: LogicalPlan)
     extends UnaryNode {
@@ -140,9 +143,9 @@ case class DecodeGenericChunks(output: Seq[Attribute], colIndices: Seq[Int],
 }
 
 /** Same automatic pruning as the token node: a narrower parent Project
-  * drops decode work column by column — and for the columnar table
-  * layout (bin_<i> parquet columns) it also re-narrows the node's child
-  * projection, so the scan skips the dropped columns' BYTES. */
+  * drops decode work column by column, and the node's child projection
+  * is re-narrowed to the kept `bin_<i>` payloads, so a persisted table's
+  * scan skips the dropped columns' BYTES. */
 object DecodeGenericChunksPruning extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case p @ Project(projList, dg: DecodeGenericChunks)
@@ -152,20 +155,9 @@ object DecodeGenericChunksPruning extends Rule[LogicalPlan] {
       val keep = projList.map(_.exprId).toSet
       val kept = dg.output.zipWithIndex.filter { case (a, _) => keep.contains(a.exprId) }
       val keptIndices = kept.map { case (_, i) => dg.colIndices(i) }
+      val needed = Set("num_rows", "chunk_id", "col_crcs") ++ keptIndices.map(ci => s"bin_$ci")
       val newChild = dg.child match {
-        case Project(_, src) =>
-          // which payload layout feeds this node: the single cols_bin
-          // array, or one bin_<i> parquet column per engine column. ALL
-          // kept bins must exist in the columnar case — silently dropping
-          // a missing one would surface later as a NoSuchElementException
-          // inside the batch iterator; fall back to the unmodified child
-          // instead, exactly as the meta-column forall below does.
-          val hasColsBin = src.output.exists(_.name == "cols_bin")
-          val needed = Seq("num_rows", "chunk_id", "col_crcs") ++
-            (if (hasColsBin) Seq("cols_bin") else keptIndices.map(ci => s"bin_$ci"))
-          if (needed.forall(n => src.output.exists(_.name == n)))
-            Project(needed.map(n => src.output.find(_.name == n).get), src)
-          else dg.child
+        case Project(childList, src) => Project(childList.filter(e => needed(e.name)), src)
         case other => other
       }
       p.copy(child = DecodeGenericChunks(
@@ -481,10 +473,7 @@ case class DecodeGenericChunksExec(output: Seq[Attribute], colIndices: Seq[Int],
 
   override protected def doExecute(): RDD[InternalRow] = {
     val outAttrs = output
-    child.execute().mapPartitions { it =>
-      val proj = UnsafeProjection.create(outAttrs, outAttrs)
-      batches(it).flatMap(b => b.rowIterator().asScala.map(proj))
-    }
+    child.execute().mapPartitions(it => GraftPlans.rowsOf(batches(it), outAttrs))
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): DecodeGenericChunksExec =
@@ -492,6 +481,9 @@ case class DecodeGenericChunksExec(output: Seq[Attribute], colIndices: Seq[Int],
 }
 
 object GraftPlans {
+  /** The row window of a full scan: every row of the chunk. */
+  val WholeChunk: (Long, Int) => (Int, Int) = (_, n) => (0, n)
+
   /** Register the strategy + pruning rule on the session (idempotent). */
   def install(spark: SparkSession): Unit = synchronized {
     val exp = org.apache.spark.sql.graftbridge.ColumnBridge.experimental(spark)
@@ -523,6 +515,49 @@ object GraftPlans {
     bridge.ofRows(spark,
       DecodeChunks(cols.map(DecodeChunks.attrFor), bridge.analyzedPlan(projected)))
   }
+
+  /** Token rows of the chunks in `windows` only, each sliced to its
+    * [from, to) row window (keyed by chunk_id) by the scan's decoder. */
+  def seekDF(chunkDF: DataFrame, windows: Map[Long, (Int, Int)]): DataFrame = {
+    val cols = DecodeChunks.TokenCols
+    val projected = chunkDF
+      .filter(org.apache.spark.sql.functions.col("chunk_id")
+        .isin(windows.keys.toSeq.map(Long.box): _*))
+      .select(DecodeChunks.chunkColsFor(cols).map(org.apache.spark.sql.functions.col): _*)
+    val chunkCols = projected.columns.toSeq
+    windowedDF(projected, cols.map(DecodeChunks.attrFor))(it =>
+      new ChunkBatchIterator(it, chunkCols, cols, (id, _) => windows(id)))
+  }
+
+  /** Generic analog of [[seekDF]] over an already filtered and projected
+    * (num_rows, chunk_id, col_crcs, bin_<i>...) chunk table. */
+  def seekGenericDF(projected: DataFrame, output: Seq[Attribute], colIndices: Seq[Int],
+                    colTypes: Seq[String], windows: Map[Long, (Int, Int)]): DataFrame = {
+    val chunkCols = projected.columns.toSeq
+    windowedDF(projected, output)(it =>
+      new GenericChunkBatchIterator(it, chunkCols, output, colIndices.toArray,
+        colTypes.toArray, (id, _) => windows(id)))
+  }
+
+  /** Seeks run the decoder outside the optimizer: a per-chunk row window
+    * is not a plan property. Rows are copied out — a seek returns few
+    * rows, and its consumer may buffer them. */
+  private def windowedDF(projected: DataFrame, output: Seq[Attribute])(
+      batches: Iterator[InternalRow] => Iterator[ColumnarBatch]): DataFrame = {
+    val rdd = projected.queryExecution.toRdd.mapPartitions(it =>
+      rowsOf(batches(it), output).map(_.copy()))
+    org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(
+      projected.sparkSession, rdd,
+      StructType(output.map(a => StructField(a.name, a.dataType, a.nullable))))
+  }
+
+  /** Batches flattened through one reused UnsafeProjection (Spark's
+    * standard producer contract — buffering consumers copy). */
+  private[plans] def rowsOf(batches: Iterator[ColumnarBatch],
+                            output: Seq[Attribute]): Iterator[InternalRow] = {
+    val proj = UnsafeProjection.create(output, output)
+    batches.flatMap(b => b.rowIterator().asScala.map(proj))
+  }
 }
 
 case class DecodeChunksExec(output: Seq[Attribute], child: SparkPlan)
@@ -543,44 +578,38 @@ case class DecodeChunksExec(output: Seq[Attribute], child: SparkPlan)
     child.execute().mapPartitions(it => new ChunkBatchIterator(it, chunkCols, outCols))
   }
 
-  /** Row fallback for consumers that call execute() directly: same
-    * batches, flattened through a reused UnsafeProjection (Spark's
-    * standard producer contract — buffering consumers copy). */
+  /** Row fallback for consumers that call execute() directly: the same
+    * batches, flattened. */
   override protected def doExecute(): RDD[InternalRow] = {
     val chunkCols = child.output.map(_.name)
     val outCols = output.map(_.name)
     val outAttrs = output
-    child.execute().mapPartitions { it =>
-      val proj = UnsafeProjection.create(outAttrs, outAttrs)
-      new ChunkBatchIterator(it, chunkCols, outCols)
-        .flatMap(b => b.rowIterator().asScala.map(proj))
-    }
+    child.execute().mapPartitions(it =>
+      GraftPlans.rowsOf(new ChunkBatchIterator(it, chunkCols, outCols), outAttrs))
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): DecodeChunksExec =
     copy(child = newChild)
 }
 
-/** One ColumnarBatch per GENERIC chunk row: each selected column decodes
-  * from its payload in cols_bin (per-column CRC verified) straight into a
+/** One ColumnarBatch per GENERIC chunk row, sliced to the chunk's
+  * `window(chunk_id, num_rows)` row range: each selected column decodes
+  * from its `bin_<i>` payload (per-column CRC verified) straight into a
   * reused OnHeapColumnVector — primitives land as positional puts with
   * null interleaving, strings/binary via the allocation-free sink, array
   * columns as bulk child-vector fills plus offsets. */
 private[plans] final class GenericChunkBatchIterator(
     rows: Iterator[InternalRow], chunkCols: Seq[String], output: Seq[Attribute],
-    colIndices: Array[Int], colTypes: Array[String])
+    colIndices: Array[Int], colTypes: Array[String],
+    window: (Long, Int) => (Int, Int) = GraftPlans.WholeChunk)
   extends Iterator[ColumnarBatch] {
+  import TokenChunkDecoder.nonNull
 
   private val idx = chunkCols.zipWithIndex.toMap
   private val iNumRows = idx("num_rows")
   private val iChunkId = idx("chunk_id")
   private val iCrcs = idx("col_crcs")
-  // two physical layouts: the chunk-row form (one cols_bin array) or the
-  // columnar table form (one bin_<i> parquet column per engine column —
-  // byte-level projection at the scan)
-  private val iBins = idx.getOrElse("cols_bin", -1)
-  private val binOrdinals: Array[Int] =
-    if (iBins >= 0) null else colIndices.map(ci => idx(s"bin_$ci"))
+  private val binOrdinals: Array[Int] = colIndices.map(ci => idx(s"bin_$ci"))
   private val schema = StructType(output.map(a =>
     StructField(a.name, a.dataType, nullable = true)).toArray)
   private var vectors: Array[OnHeapColumnVector] = _
@@ -592,49 +621,55 @@ private[plans] final class GenericChunkBatchIterator(
     val n = row.getInt(iNumRows)
     val chunkId = row.getLong(iChunkId)
     val crcs = row.getArray(iCrcs)
-    val bins = if (iBins >= 0) row.getArray(iBins) else null
+    val (from, to) = window(chunkId, n)
+    require(0 <= from && from <= to && to <= n,
+      s"generic chunk $chunkId: rows [$from,$to) of $n")
+    val m = to - from
     if (vectors == null)
-      vectors = OnHeapColumnVector.allocateColumns(math.max(n, 1024), schema)
+      vectors = OnHeapColumnVector.allocateColumns(math.max(m, 1024), schema)
     else {
       var i = 0
-      while (i < vectors.length) { vectors(i).reset(); vectors(i).reserve(n); i += 1 }
+      while (i < vectors.length) { vectors(i).reset(); vectors(i).reserve(m); i += 1 }
     }
     var k = 0
     while (k < colIndices.length) {
       val ci = colIndices(k)
-      val bin = if (bins != null) bins.getBinary(ci) else row.getBinary(binOrdinals(k))
+      val bin = row.getBinary(binOrdinals(k))
       val crc = new java.util.zip.CRC32()
       crc.update(bin)
       require(crc.getValue == crcs.getLong(ci),
         s"generic chunk $chunkId: column ${output(k).name} CRC mismatch")
       val (flags, inner) = Chunks.unwrapNullable(bin)
-      fill(vectors(k), colTypes(k), flags, inner, n, output(k).dataType)
+      fill(vectors(k), colTypes(k), flags, inner, n, from, to, output(k).dataType)
       k += 1
     }
-    new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]], n)
+    new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]], m)
   }
 
-  /** Scatter a dense primitive decode across null flags. */
+  /** Decode one column of `n` rows and keep rows [from, to). */
   private def fill(v: OnHeapColumnVector, tpe: String, flags: Array[Boolean],
-                   inner: Array[Byte], n: Int, dt: DataType): Unit = {
+                   inner: Array[Byte], n: Int, from: Int, to: Int, dt: DataType): Unit = {
+    // scatter a dense decode across null flags, keeping the window's rows
     @inline def scatter(put: (Int, Int) => Unit, denseLen: Int): Unit = {
       var r = 0
       var k = 0
       while (r < n) {
-        if (flags != null && flags(r)) v.putNull(r)
-        else { put(r, k); k += 1 }
+        val isNull = flags != null && flags(r)
+        if (r >= from && r < to) { if (isNull) v.putNull(r - from) else put(r - from, k) }
+        if (!isNull) k += 1
         r += 1
       }
       require(k == denseLen, s"dense underflow: $k of $denseLen")
     }
+    val m = to - from
     tpe match {
       case "int" | "date" =>
         val a = Chunks.decodeInts(inner)
-        if (flags == null) v.putInts(0, n, a, 0)
+        if (flags == null) v.putInts(0, m, a, from)
         else scatter((r, k) => v.putInt(r, a(k)), a.length)
       case "bigint" | "timestamp" | "timestamp_ntz" =>
         val a = Chunks.decodeLongs(inner)
-        if (flags == null) v.putLongs(0, n, a, 0)
+        if (flags == null) v.putLongs(0, m, a, from)
         else scatter((r, k) => v.putLong(r, a(k)), a.length)
       case dec if dec.startsWith("decimal(") =>
         val a = Chunks.decodeLongs(inner)
@@ -646,17 +681,17 @@ private[plans] final class GenericChunkBatchIterator(
         else scatter((r, k) => v.putLong(r, a(k)), a.length)
       case "double" =>
         val a = Chunks.decodeDoubles(inner)
-        if (flags == null) v.putDoubles(0, n, a, 0)
+        if (flags == null) v.putDoubles(0, m, a, from)
         else scatter((r, k) => v.putDouble(r, a(k)), a.length)
       case "float" =>
         val a = Chunks.decodeFloats(inner)
-        if (flags == null) v.putFloats(0, n, a, 0)
+        if (flags == null) v.putFloats(0, m, a, from)
         else scatter((r, k) => v.putFloat(r, a(k)), a.length)
       case "boolean" =>
         val a = Chunks.decodeBooleans(inner)
         scatter((r, k) => v.putBoolean(r, a(k)), a.length)
       case "string" | "binary" =>
-        val sink = new VectorBytesSink(v, flags)
+        val sink = new VectorBytesSink(v, flags, from, to)
         Chunks.decodeStringsInto(inner, sink)
         sink.finishNulls(n)
       case t if t.startsWith("array<") =>
@@ -668,14 +703,26 @@ private[plans] final class GenericChunkBatchIterator(
         // elements too — rep/def-level analog)
         val (ef, denseBin) = Chunks.unwrapNullable(rest)
         val data = v.arrayData()
-        var totalElems = 0
-        locally { var i = 0; while (i < lens.length) { totalElems += lens(i); i += 1 } }
-        data.reserve(math.max(1, totalElems))
+        // the window's non-null rows are lens[k0, k1); their elements
+        // are [e0, e1) of the chunk's element sequence
+        val k0 = nonNull(flags, 0, from)
+        val k1 = k0 + nonNull(flags, from, to)
+        def elems(a: Int, b: Int): Int = {
+          var s = 0
+          var i = a
+          while (i < b) { s += lens(i); i += 1 }
+          s
+        }
+        val e0 = elems(0, k0)
+        val e1 = e0 + elems(k0, k1)
+        val totalElems = e1 + elems(k1, lens.length)
+        data.reserve(math.max(1, e1 - e0))
         @inline def scatterElems(put: (Int, Int) => Unit): Unit = {
           var e = 0
           var k = 0
           while (e < totalElems) {
-            if (ef(e)) data.putNull(e) else { put(e, k); k += 1 }
+            if (ef(e)) { if (e >= e0 && e < e1) data.putNull(e - e0) }
+            else { if (e >= e0 && e < e1) put(e - e0, k); k += 1 }
             e += 1
           }
         }
@@ -683,43 +730,44 @@ private[plans] final class GenericChunkBatchIterator(
           case "array<int>" =>
             if (ef == null) {
               val flat = StreamedTokens.decode(denseBin, lens)
-              data.putInts(0, flat.length, flat, 0)
+              data.putInts(0, e1 - e0, flat, e0)
             } else {
               val a = Chunks.decodeInts(denseBin)
               scatterElems((e, k) => data.putInt(e, a(k)))
             }
           case "array<bigint>" =>
             val a = Chunks.decodeLongs(denseBin)
-            if (ef == null) data.putLongs(0, a.length, a, 0)
+            if (ef == null) data.putLongs(0, e1 - e0, a, e0)
             else scatterElems((e, k) => data.putLong(e, a(k)))
           case "array<float>" =>
             val a = Chunks.decodeFloats(denseBin)
-            if (ef == null) data.putFloats(0, a.length, a, 0)
+            if (ef == null) data.putFloats(0, e1 - e0, a, e0)
             else scatterElems((e, k) => data.putFloat(e, a(k)))
           case "array<double>" =>
             val a = Chunks.decodeDoubles(denseBin)
-            if (ef == null) data.putDoubles(0, a.length, a, 0)
+            if (ef == null) data.putDoubles(0, e1 - e0, a, e0)
             else scatterElems((e, k) => data.putDouble(e, a(k)))
           case "array<string>" =>
-            val sink = new VectorBytesSink(data, ef)
+            val sink = new VectorBytesSink(data, ef, e0, e1)
             Chunks.decodeStringsInto(denseBin, sink)
             if (ef != null) sink.finishNulls(totalElems)
           case other => throw new IllegalArgumentException(s"generic decode: $other")
         }
-        putArrays(v, flags, lens, n)
+        putArrays(v, flags, lens, from, to, k0)
       case other => throw new IllegalArgumentException(s"generic decode: $other")
     }
   }
 
-  /** Array offsets from per-row lengths, null rows interleaved. */
+  /** Array offsets of rows [from, to) from per-row lengths, null rows
+    * interleaved; `k0` is the first window row's index into `lens`. */
   private def putArrays(v: OnHeapColumnVector, flags: Array[Boolean],
-                        lens: Array[Int], n: Int): Unit = {
-    var r = 0
-    var k = 0
+                        lens: Array[Int], from: Int, to: Int, k0: Int): Unit = {
+    var r = from
+    var k = k0
     var off = 0
-    while (r < n) {
-      if (flags != null && flags(r)) v.putNull(r)
-      else { v.putArray(r, off, lens(k)); off += lens(k); k += 1 }
+    while (r < to) {
+      if (flags != null && flags(r)) v.putNull(r - from)
+      else { v.putArray(r - from, off, lens(k)); off += lens(k); k += 1 }
       r += 1
     }
   }
@@ -727,89 +775,125 @@ private[plans] final class GenericChunkBatchIterator(
 
 /** Writes decoded string values straight into a column vector in row
   * order, interleaving nulls per the chunk's null flags (the vector
-  * copies each slice, honoring the sink's copy-what-you-keep contract). */
+  * copies each slice, honoring the sink's copy-what-you-keep contract).
+  * Only rows in [from, to) are kept, at vector positions from 0. */
 private[plans] final class VectorBytesSink(
     v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
-    nullFlags: Array[Boolean]) extends graft.codec.BytesSink {
+    nullFlags: Array[Boolean], from: Int, to: Int) extends graft.codec.BytesSink {
   private var r = 0
+  private def putNull(): Unit = {
+    if (r >= from && r < to) v.putNull(r - from)
+    r += 1
+  }
   override def put(buf: Array[Byte], off: Int, len: Int): Unit = {
-    if (nullFlags != null) while (nullFlags(r)) { v.putNull(r); r += 1 }
-    v.putByteArray(r, buf, off, len)
+    if (nullFlags != null) while (nullFlags(r)) putNull()
+    if (r >= from && r < to) v.putByteArray(r - from, buf, off, len)
     r += 1
   }
   /** Mark any trailing null rows after the last non-null value. */
   def finishNulls(n: Int): Unit =
     while (r < n) {
       require(nullFlags != null && nullFlags(r), s"row $r missing a value")
-      v.putNull(r)
-      r += 1
+      putNull()
     }
 }
 
-/** One ColumnarBatch per chunk row. Vectors are allocated once and
-  * reset per chunk (the consumer copies what it keeps — the same reuse
-  * contract as Spark's vectorized parquet reader). Only the streams the
-  * requested columns need are CRC-checked and decoded. */
-private[plans] final class ChunkBatchIterator(
-    rows: Iterator[InternalRow], chunkCols: Seq[String], outCols: Seq[String])
+/** One ColumnarBatch per chunk row of `rows`, sliced to the chunk's
+  * `window(chunk_id, num_rows)` row range (the whole chunk for a scan,
+  * the covering range for a seek). */
+private[graft] final class ChunkBatchIterator(
+    rows: Iterator[InternalRow], chunkCols: Seq[String], outCols: Seq[String],
+    window: (Long, Int) => (Int, Int) = GraftPlans.WholeChunk)
   extends Iterator[ColumnarBatch] {
 
   private val idx = chunkCols.zipWithIndex.toMap
   private val iNumRows = idx("num_rows")
   private val iChunkId = idx("chunk_id")
   private val iCrcs = idx("stream_crcs")
-
-  private val needDoc = outCols.contains("doc_id")
-  private val needTokens = outCols.contains("tokens")
-  private val needNtok = outCols.contains("n_tok")
-  private val needSrc = outCols.contains("source")
-
-  private val schema = StructType(outCols.map {
-    case "doc_id" => StructField("doc_id", StringType, nullable = false)
-    case "tokens" =>
-      StructField("tokens", ArrayType(IntegerType, containsNull = false), nullable = true)
-    case "n_tok" => StructField("n_tok", IntegerType, nullable = false)
-    case "source" => StructField("source", StringType, nullable = true)
-  }.toArray)
-  private var vectors: Array[OnHeapColumnVector] = _
-
-  private def checkCrc(bin: Array[Byte], want: Long, what: String, chunkId: Long): Unit = {
-    val c = new java.util.zip.CRC32()
-    c.update(bin)
-    require(c.getValue == want, s"chunk $chunkId: $what stream CRC mismatch")
-  }
+  private val streamOrdinals = TokenChunkDecoder.StreamCols.map(idx.getOrElse(_, -1)).toArray
+  private val decoder = new TokenChunkDecoder(outCols)
+  private var row: InternalRow = _
+  private val stream: Int => Array[Byte] = s => row.getBinary(streamOrdinals(s))
 
   override def hasNext: Boolean = rows.hasNext
 
   override def next(): ColumnarBatch = {
-    val row = rows.next()
+    row = rows.next()
     val n = row.getInt(iNumRows)
     val chunkId = row.getLong(iChunkId)
-    val crcs = row.getArray(iCrcs).toLongArray()
+    val (from, to) = window(chunkId, n)
+    decoder.decode(n, chunkId, row.getArray(iCrcs).toLongArray(), stream, from, to)
+  }
+}
+
+/** The one token-chunk decoder: rows [from, to) of a chunk land in
+  * reused `OnHeapColumnVector`s, one ColumnarBatch per call. The scan
+  * (DecodeChunksExec), `seekToRows` and the callers that hold
+  * `EncodedChunk` objects (compaction, ChunkJoin) all run this body.
+  * Vectors are reset per chunk (the consumer copies what it keeps — the
+  * same reuse contract as Spark's vectorized parquet reader). Only the
+  * streams the requested columns need are CRC-checked and decoded; the
+  * row-level streams (lens, doc_id, source) decode whole, while token
+  * pages outside the window are skipped by bytes (reference SeekToRow,
+  * file.go:684-709). */
+private[graft] final class TokenChunkDecoder(outCols: Seq[String]) {
+  import TokenChunkDecoder._
+
+  private val needTokens = outCols.contains("tokens")
+  private val needNtok = outCols.contains("n_tok")
+
+  private val schema = StructType(outCols.map { c =>
+    val a = DecodeChunks.attrFor(c)
+    StructField(a.name, a.dataType, a.nullable)
+  }.toArray)
+  private var vectors: Array[OnHeapColumnVector] = _
+
+  /** Typed adapter: the whole of one `EncodedChunk`. */
+  def decode(c: graft.spark.EncodedChunk): ColumnarBatch = {
+    val bins = Array(c.tokens_bin, c.lens_bin, c.docid_bin, c.source_bin)
+    decode(c.num_rows, c.chunk_id, c.stream_crcs.toArray, bins(_), 0, c.num_rows)
+  }
+
+  /** `stream(s)` returns stream `s` (in `stream_crcs` order: tokens,
+    * lens, docid, source); only the streams `outCols` need are fetched. */
+  def decode(n: Int, chunkId: Long, crcs: Array[Long], stream: Int => Array[Byte],
+             from: Int, to: Int): ColumnarBatch = {
+    require(0 <= from && from <= to && to <= n, s"chunk $chunkId: rows [$from,$to) of $n")
+    val m = to - from
+    def checked(s: Int): Array[Byte] = {
+      val bin = stream(s)
+      val c = new java.util.zip.CRC32()
+      c.update(bin)
+      require(c.getValue == crcs(s), s"chunk $chunkId: ${StreamNames(s)} stream CRC mismatch")
+      bin
+    }
     if (vectors == null)
-      vectors = OnHeapColumnVector.allocateColumns(math.max(n, 1024), schema)
+      vectors = OnHeapColumnVector.allocateColumns(math.max(m, 1024), schema)
     else {
       var i = 0
-      while (i < vectors.length) { vectors(i).reset(); vectors(i).reserve(n); i += 1 }
+      while (i < vectors.length) { vectors(i).reset(); vectors(i).reserve(m); i += 1 }
     }
 
-    var lens: Array[Int] = null
+    var lens: Array[Int] = null // one per non-null token row
     var tokFlags: Array[Boolean] = null
-    var flat: Array[Int] = null
+    var nnFrom = 0 // non-null token rows before the window
+    var flat: Array[Int] = null // the window's tokens
     if (needTokens || needNtok) {
-      val lensBin = row.getBinary(idx("lens_bin"))
-      checkCrc(lensBin, crcs(1), "lens", chunkId)
-      lens = Chunks.decodeInts(BlockCompression.decompress(lensBin))
-      val tokensBin = row.getBinary(idx("tokens_bin"))
-      checkCrc(tokensBin, crcs(0), "tokens", chunkId)
+      lens = Chunks.decodeInts(BlockCompression.decompress(checked(Lens)))
+      val tokensBin = checked(Tokens)
       if (needTokens) {
         val (f, inner) = Chunks.unwrapNullable(BlockCompression.decompress(tokensBin))
         tokFlags = f
-        flat = StreamedTokens.decode(inner, lens)
-      } else if (BlockCompression.isFramed(tokensBin) ||
-          (tokensBin(0) & 0xFF) == Codecs.NullableWrap) {
-        // n_tok without tokens: bitmap peek only, token payload never decoded
-        tokFlags = Chunks.nullFlagsOf(BlockCompression.decompress(tokensBin))
+        nnFrom = nonNull(f, 0, from)
+        flat =
+          if (m == n) StreamedTokens.decode(inner, lens)
+          else StreamedTokens.decodeRows(inner, lens, nnFrom, nnFrom + nonNull(f, from, to))._1
+      } else {
+        if (BlockCompression.isFramed(tokensBin) ||
+            (tokensBin(0) & 0xFF) == Codecs.NullableWrap)
+          // n_tok without tokens: bitmap peek only, token payload never decoded
+          tokFlags = Chunks.nullFlagsOf(BlockCompression.decompress(tokensBin))
+        nnFrom = nonNull(tokFlags, 0, from)
       }
     }
 
@@ -818,42 +902,59 @@ private[plans] final class ChunkBatchIterator(
       val v = vectors(c)
       name match {
         case "doc_id" =>
-          val docBin = row.getBinary(idx("docid_bin"))
-          checkCrc(docBin, crcs(2), "docid", chunkId)
           // allocation-free: values land in the vector as buffer slices
-          val sink = new VectorBytesSink(v, null)
-          val decoded = Chunks.decodeStringsInto(BlockCompression.decompress(docBin), sink)
+          val sink = new VectorBytesSink(v, null, from, to)
+          val decoded = Chunks.decodeStringsInto(
+            BlockCompression.decompress(checked(DocId)), sink)
           require(decoded == n, s"chunk $chunkId: $decoded doc_ids for $n rows")
         case "tokens" =>
           val data = v.arrayData()
           data.reserve(flat.length)
           data.putInts(0, flat.length, flat, 0)
-          var r = 0
-          var k = 0
+          var r = from
+          var k = nnFrom
           var off = 0
-          while (r < n) {
-            if (tokFlags != null && tokFlags(r)) v.putNull(r)
-            else { val len = lens(k); v.putArray(r, off, len); off += len; k += 1 }
+          while (r < to) {
+            if (tokFlags != null && tokFlags(r)) v.putNull(r - from)
+            else { val len = lens(k); v.putArray(r - from, off, len); off += len; k += 1 }
             r += 1
           }
         case "n_tok" =>
-          var r = 0
-          var k = 0
-          while (r < n) {
-            if (tokFlags != null && tokFlags(r)) v.putInt(r, -1)
-            else { v.putInt(r, lens(k)); k += 1 }
+          var r = from
+          var k = nnFrom
+          while (r < to) {
+            if (tokFlags != null && tokFlags(r)) v.putInt(r - from, -1)
+            else { v.putInt(r - from, lens(k)); k += 1 }
             r += 1
           }
         case "source" =>
-          val srcBin = row.getBinary(idx("source_bin"))
-          checkCrc(srcBin, crcs(3), "source", chunkId)
-          val (srcFlags, srcInner) = Chunks.unwrapNullable(BlockCompression.decompress(srcBin))
-          val sink = new VectorBytesSink(v, srcFlags)
+          val (srcFlags, srcInner) =
+            Chunks.unwrapNullable(BlockCompression.decompress(checked(Source)))
+          val sink = new VectorBytesSink(v, srcFlags, from, to)
           Chunks.decodeStringsInto(srcInner, sink)
           sink.finishNulls(n)
       }
       c += 1
     }
-    new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]], n)
+    new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]], m)
+  }
+}
+
+private[graft] object TokenChunkDecoder {
+  /** Stream ids: positions in a chunk's `stream_crcs`. */
+  final val Tokens = 0
+  final val Lens = 1
+  final val DocId = 2
+  final val Source = 3
+  val StreamCols: Seq[String] = Seq("tokens_bin", "lens_bin", "docid_bin", "source_bin")
+  private val StreamNames = Seq("tokens", "lens", "docid", "source")
+
+  /** Rows r in [from, to) whose null flag is clear (all of them when
+    * `flags` is null). */
+  def nonNull(flags: Array[Boolean], from: Int, to: Int): Int = {
+    var c = 0
+    var r = from
+    while (r < to) { if (flags == null || !flags(r)) c += 1; r += 1 }
+    c
   }
 }

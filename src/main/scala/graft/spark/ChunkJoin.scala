@@ -87,6 +87,8 @@ object ChunkJoin {
           lo
         }
         val sortedChunks = chunkIt.toArray.sortBy(_.chunk_id)
+        // the token payload is never decoded: n_tok comes from lens
+        val decoder = new graft.plans.TokenChunkDecoder(Seq("doc_id", "n_tok", "source"))
         var i = 0 // probe cursor, monotone across the whole partition
         // lazy end-to-end: one decoded chunk in flight, matches stream out
         sortedChunks.iterator.flatMap { c =>
@@ -95,17 +97,22 @@ object ChunkJoin {
           if (lb >= probeArr.length ||
               probeArr(lb)._1.compareTo(UTF8String.fromString(c.last_doc_id)) > 0)
             Iterator.empty
-          else EncodePipeline.decodeChunk(c).flatMap { row =>
-            val key = UTF8String.fromString(row.doc_id)
-            while (i < probeArr.length && probeArr(i)._1.compareTo(key) < 0) i += 1
-            var j = i
-            var matches = List.empty[ChunkJoinRow]
-            while (j < probeArr.length && probeArr(j)._1.compareTo(key) == 0) {
-              matches = ChunkJoinRow(row.doc_id, row.source, row.n_tok,
-                probeArr(j)._2) :: matches
-              j += 1
+          else {
+            val batch = decoder.decode(c)
+            val (docIds, nTok, sources) = (batch.column(0), batch.column(1), batch.column(2))
+            Iterator.range(0, batch.numRows()).flatMap { r =>
+              val key = docIds.getUTF8String(r)
+              while (i < probeArr.length && probeArr(i)._1.compareTo(key) < 0) i += 1
+              var j = i
+              var matches = List.empty[ChunkJoinRow]
+              while (j < probeArr.length && probeArr(j)._1.compareTo(key) == 0) {
+                matches = ChunkJoinRow(key.toString,
+                  if (sources.isNullAt(r)) null else sources.getUTF8String(r).toString,
+                  nTok.getInt(r), probeArr(j)._2) :: matches
+                j += 1
+              }
+              matches
             }
-            matches
           }
         }
       }

@@ -5,6 +5,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 /** One encoded column chunk — the analog of a reference row group's worth
   * of pages (reference: row_group.go:16-53, page.go:22-85). All four
@@ -34,7 +35,8 @@ final case class EncodedChunk(
     /** Per-stream CRCs (tokens, lens, docid, source, bloom): a projected
       * read that fetches only SOME streams can still fail loudly on
       * corruption without touching the streams it skipped (the reference
-      * CRCs per page, page.go; whole-chunk crc32 stays for full decodes). */
+      * CRCs per page, page.go). Reads check these; `crc32` covers all
+      * five and is still written. */
     stream_crcs: Seq[Long],
     tokens_bloom: Array[Byte],
     tokens_bin: Array[Byte],
@@ -394,53 +396,13 @@ object EncodePipeline {
 
   // ----------------------------------------------------------------- decode
 
-  /** Chunk table → token rows; pure per-chunk flatMap, no shuffle. */
+  /** Chunk table → token rows; the columnar scan of [[decodeDF]], no
+    * shuffle. Rows whose tokens were NULL come back with `tokens = null,
+    * n_tok = -1`; NULL sources come back null. */
   def decode(chunks: Dataset[EncodedChunk]): Dataset[TokenRow] = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    chunks.flatMap(decodeChunk)
-  }
-
-  /** Null-aware decode: rows whose tokens were NULL come back with
-    * `tokens = null, n_tok = -1`; NULL sources come back null. */
-  def decodeChunk(c: EncodedChunk): Iterator[TokenRow] = {
-    val crc = new java.util.zip.CRC32()
-    crc.update(c.tokens_bin); crc.update(c.lens_bin)
-    crc.update(c.docid_bin); crc.update(c.source_bin)
-    crc.update(c.tokens_bloom)
-    require(crc.getValue == c.crc32, s"chunk ${c.chunk_id}: CRC mismatch")
-    val lens = Chunks.decodeInts(BlockCompression.decompress(c.lens_bin))
-    val (tokFlags, tokensInner) = Chunks.unwrapNullable(BlockCompression.decompress(c.tokens_bin))
-    val tokens = StreamedTokens.decode(tokensInner, lens)
-    val docIds = Chunks.decodeStrings(BlockCompression.decompress(c.docid_bin))
-    val (srcFlags, srcInner) = Chunks.unwrapNullable(BlockCompression.decompress(c.source_bin))
-    val srcDense = Chunks.decodeStrings(srcInner)
-    val offsets = new Array[Int](lens.length + 1)
-    var i = 0
-    while (i < lens.length) { offsets(i + 1) = offsets(i) + lens(i); i += 1 }
-    var tokCursor = 0
-    var srcCursor = 0
-    Iterator.tabulate(c.num_rows) { r =>
-      val tokensOut =
-        if (tokFlags != null && tokFlags(r)) null
-        else {
-          val k = tokCursor
-          tokCursor += 1
-          java.util.Arrays.copyOfRange(tokens, offsets(k), offsets(k + 1))
-        }
-      val sourceOut =
-        if (srcFlags != null && srcFlags(r)) null
-        else {
-          val s = srcDense(srcCursor)
-          srcCursor += 1
-          new String(s, UTF_8)
-        }
-      TokenRow(
-        new String(docIds(r), UTF_8),
-        tokensOut,
-        if (tokensOut == null) -1 else tokensOut.length,
-        sourceOut)
-    }
+    decodeDF(chunks).as[TokenRow]
   }
 
   /** Decode as a columnar scan: a custom Catalyst plan
@@ -456,64 +418,6 @@ object EncodePipeline {
   def decodeDF(chunks: Dataset[EncodedChunk],
                cols: Seq[String] = Seq("doc_id", "tokens", "n_tok", "source")): DataFrame =
     graft.plans.GraftPlans.decodeDF(chunks.toDF(), cols)
-
-  /** Partial chunk decode: only rows [fromRow, toRow) of one chunk. Token
-    * pages outside the range are skipped by bytes via the paged offset
-    * index (reference SeekToRow, file.go:684-709); the row-level streams
-    * (lens, doc_id, source — a few % of chunk bytes) decode fully. */
-  def decodeChunkRows(c: EncodedChunk, fromRow: Int, toRow: Int): Iterator[TokenRow] = {
-    require(fromRow >= 0 && fromRow <= toRow && toRow <= c.num_rows,
-      s"rows [$fromRow,$toRow) of ${c.num_rows}")
-    // Same corruption-fails-loudly stance as decodeChunk/decodeDF: the
-    // partial read skips token-page DECODE, but the chunk's bytes are all
-    // in hand, so the CRC pass (proportional to bytes, not rows) is cheap
-    // relative to having fetched them.
-    val crc = new java.util.zip.CRC32()
-    crc.update(c.tokens_bin); crc.update(c.lens_bin)
-    crc.update(c.docid_bin); crc.update(c.source_bin)
-    crc.update(c.tokens_bloom)
-    require(crc.getValue == c.crc32, s"chunk ${c.chunk_id}: CRC mismatch")
-    val lens = Chunks.decodeInts(BlockCompression.decompress(c.lens_bin))
-    val (tokFlags, tokensInner) = Chunks.unwrapNullable(BlockCompression.decompress(c.tokens_bin))
-    // map chunk rows -> non-null token-row indices
-    var nnStart = 0
-    var r = 0
-    while (r < fromRow) { if (tokFlags == null || !tokFlags(r)) nnStart += 1; r += 1 }
-    var nnEnd = nnStart
-    while (r < toRow) { if (tokFlags == null || !tokFlags(r)) nnEnd += 1; r += 1 }
-    val (flat, _, _) = StreamedTokens.decodeRows(tokensInner, lens, nnStart, nnEnd)
-    val docIds = Chunks.decodeStrings(BlockCompression.decompress(c.docid_bin))
-    val (srcFlags, srcInner) = Chunks.unwrapNullable(BlockCompression.decompress(c.source_bin))
-    val srcDense = Chunks.decodeStrings(srcInner)
-    var srcCursor = 0
-    r = 0
-    while (r < fromRow) { if (srcFlags == null || !srcFlags(r)) srcCursor += 1; r += 1 }
-    var tokRow = nnStart
-    var flatOff = 0
-    var row = fromRow
-    Iterator.continually {
-      val cur = row
-      row += 1
-      val tokensOut =
-        if (tokFlags != null && tokFlags(cur)) null
-        else {
-          val n = lens(tokRow)
-          tokRow += 1
-          val a = java.util.Arrays.copyOfRange(flat, flatOff, flatOff + n)
-          flatOff += n
-          a
-        }
-      val sourceOut =
-        if (srcFlags != null && srcFlags(cur)) null
-        else {
-          val s = srcDense(srcCursor)
-          srcCursor += 1
-          new String(s, UTF_8)
-        }
-      TokenRow(new String(docIds(cur), UTF_8), tokensOut,
-        if (tokensOut == null) -1 else tokensOut.length, sourceOut)
-    }.take(toRow - fromRow)
-  }
 
   /** Distributed row-offset index over a chunk table: one row per chunk
     * with its global `row_start` in the canonical (part_id, chunk_id)
@@ -555,10 +459,13 @@ object EncodePipeline {
     * (part_id, chunk_id, row-in-chunk): the distributed row index picks
     * the covering chunks (only THOSE reach the driver — O(count/chunk),
     * not O(#chunks); rounds 1-2 collected every chunk's metadata), and
-    * each decodes only its needed row range — reading 10 rows of a
-    * 10^9-row table touches one or two chunks and within them only the
-    * covering token pages. Pass a persisted `index` (encodeCheckpointed
-    * writes one under <dir>/row_index) to skip the metadata job. */
+    * each decodes only its needed row range through the scan's decoder —
+    * reading 10 rows of a 10^9-row table touches one or two chunks and
+    * within them only the covering token pages (the row-level lens,
+    * doc_id and source streams, a few % of chunk bytes, decode whole).
+    * Every stream read is CRC-checked. Pass a persisted `index`
+    * (encodeCheckpointed writes one under <dir>/row_index) to skip the
+    * metadata job. */
   def seekToRows(chunks: Dataset[EncodedChunk], start: Long, count: Long,
                  index: Option[DataFrame] = None): Dataset[TokenRow] = {
     val spark = chunks.sparkSession
@@ -567,7 +474,7 @@ object EncodePipeline {
       .filter(col("row_start") < start + count &&
         col("row_start") + col("num_rows") > start)
       .collect() // O(covering chunks)
-    val ranges: Map[Long, (Int, Int)] = covering.map { r =>
+    val windows: Map[Long, (Int, Int)] = covering.map { r =>
       val id = r.getLong(0)
       val rowStart = r.getLong(1)
       val n = r.getInt(2)
@@ -575,16 +482,7 @@ object EncodePipeline {
       val hi = math.min(start + count, rowStart + n)
       id -> ((lo - rowStart).toInt, (hi - rowStart).toInt)
     }.toMap
-    val bc = spark.sparkContext.broadcast(ranges)
-    chunks
-      // Column-level filter (not a typed closure): the candidate id set is
-      // tiny, pushes into the parquet scan, and never deserializes the
-      // chunk payloads of non-covering chunks
-      .filter(col("chunk_id").isin(ranges.keys.toSeq.map(Long.box): _*))
-      .flatMap { c =>
-        val (from, to) = bc.value(c.chunk_id)
-        decodeChunkRows(c, from, to)
-      }
+    graft.plans.GraftPlans.seekDF(chunks.toDF(), windows).as[TokenRow]
   }
 
   // ------------------------------------------------------------- checkpoint
@@ -1055,9 +953,16 @@ object EncodePipeline {
     val addedOf = runAdded.withDefaultValue(0)
     val decoded = joined
       .filter(t => t._2._4 > 1L || t._2._5)
-      .flatMap { case ((run, c), (g, _, _, _, _)) =>
-        decodeChunk(c).map(r =>
-          (r.doc_id, r.tokens, r.n_tok, r.source, g, addedOf(run)))
+      .mapPartitions { it =>
+        val decoder = new graft.plans.TokenChunkDecoder(graft.plans.DecodeChunks.TokenCols)
+        it.flatMap { case ((run, c), (g, _, _, _, _)) =>
+          decoder.decode(c).rowIterator().asScala.map(r =>
+            (r.getUTF8String(0).toString,
+              if (r.isNullAt(1)) null else r.getArray(1).toIntArray(),
+              r.getInt(2),
+              if (r.isNullAt(3)) null else r.getUTF8String(3).toString,
+              g, addedOf(run)))
+        }
       }
       .toDF("doc_id", "tokens", "n_tok", "source", "part_id", "__added")
     val surviving = (deletes match {

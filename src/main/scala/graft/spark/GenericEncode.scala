@@ -532,8 +532,9 @@ object GenericEncode {
     * element is null, the dense values inside a NULLABLE wrapper whose
     * bitmap spans all elements (parquet's definition levels;
     * reference column_buffer.go:421-454). The two cases discriminate on
-    * the stream's leading codec tag, so pre-round-5 tables (never
-    * null-wrapped) decode unchanged. */
+    * the stream's leading codec tag. The unwrapped dense stream is the
+    * live encoding of every null-free array column (and the only one
+    * `StreamedTokens` int arrays use), not a compatibility format. */
   private sealed abstract class ArrayColBuilder extends ColBuilder {
     protected val lens = new IntBuf
     protected val elemFlags = new scala.collection.mutable.ArrayBuffer[Boolean](4096)
@@ -937,9 +938,10 @@ object GenericEncode {
   /** Row-offset seek over a generic chunk table (schema-generic SeekToRow,
     * reference file.go:684-709): covering chunks come from the same
     * distributed row index the token pipeline uses, and each covering
-    * chunk decodes only the requested columns, sliced to the needed rows.
-    * Generic columns carry no intra-chunk page index, so partial-ness is
-    * chunk-granular (the token table additionally byte-skips pages). */
+    * chunk decodes only the requested columns (CRC-checked), kept to the
+    * needed rows, through the scan's columnar decoder. Generic columns
+    * carry no intra-chunk page index, so partial-ness is chunk-granular
+    * (the token table additionally byte-skips pages). */
   def seekRows(spark: SparkSession, chunks: Dataset[GenericChunk], start: Long, count: Long,
                cols: Seq[String] = Seq.empty): DataFrame = {
     val meta = metaHead(chunks)
@@ -948,39 +950,21 @@ object GenericEncode {
       .filter(fcol("row_start") < start + count &&
         fcol("row_start") + fcol("num_rows") > start)
       .collect() // O(covering chunks)
-    val ranges: Map[Long, (Int, Int)] = covering.map { r =>
+    val windows: Map[Long, (Int, Int)] = covering.map { r =>
       val id = r.getLong(0)
       val rowStart = r.getLong(1)
       val n = r.getInt(2)
       id -> ((math.max(start, rowStart) - rowStart).toInt,
         (math.min(start + count, rowStart + n) - rowStart).toInt)
     }.toMap
-    val bc = spark.sparkContext.broadcast(ranges)
     val (allNames, allTypes) = meta.get
-    val selected: Seq[Int] =
-      if (cols.isEmpty) allNames.indices
-      else {
-        val keep = allNames.zipWithIndex.filter { case (n, _) =>
-          cols.contains(n.split(Sep, 2)(0))
-        }
-        // mirror decode(): a misspelled column must fail loudly, not
-        // silently return zero-column rows
-        require(keep.nonEmpty, s"no requested column among $cols in table schema")
-        keep.map(_._2)
-      }
-    val schema = StructType(selected.map(i =>
-      StructField(allNames(i), parseType(allTypes(i)), nullable = true)))
-    val full = selected.size == allNames.size
-    val sel = selected.toArray
-    val rowRdd = chunks
-      .filter(fcol("chunk_id").isin(ranges.keys.toSeq.map(Long.box): _*))
-      .rdd.flatMap { c =>
-        val (from, to) = bc.value(c.chunk_id)
-        decodeChunkInternal(c, sel, full).slice(from, to)
-      }
-    val flat = org.apache.spark.sql.graftbridge.ColumnBridge
-      .internalCreateDataFrame(spark, rowRdd, schema)
-    if (schema.fieldNames.exists(_.contains(Sep))) unflatten(flat) else flat
+    val selected = selectedColumns(allNames, cols)
+    val attrs = attrsOf(allNames, allTypes, selected)
+    val projected = binColumns(
+      chunks.toDF().filter(fcol("chunk_id").isin(windows.keys.toSeq.map(Long.box): _*)),
+      selected, arrayBin)
+    restoreNesting(graft.plans.GraftPlans.seekGenericDF(
+      projected, attrs, selected, selected.map(allTypes(_)), windows))
   }
 
   // ------------------------------------------------- columnar table layout
@@ -1100,7 +1084,7 @@ object GenericEncode {
   private def writeColumnarN(chunks: Dataset[GenericChunk], path: String,
                              n: Int): Unit = {
     val base = ChunkMetaCols.map(fcol)
-    val bins = (0 until n).map(i => fcol("cols_bin").getItem(i).as(s"bin_$i"))
+    val bins = (0 until n).map(i => arrayBin(i).as(s"bin_$i"))
     chunks.toDF().select(base ++ bins: _*).write.mode("overwrite")
       .option("compression", EncodePipeline.ChunkTableCompression)
       .parquet(path)
@@ -1123,29 +1107,10 @@ object GenericEncode {
   def decodeColumnarTable(spark: SparkSession, path: String,
                           cols: Seq[String] = Seq.empty): DataFrame = {
     val df = spark.read.parquet(path)
-    val head = df.select("col_names", "col_types").limit(1).collect()
-    if (head.isEmpty) return spark.emptyDataFrame
-    val allNames = head(0).getSeq[String](0)
-    val allTypes = head(0).getSeq[String](1)
-    val selected: Seq[Int] =
-      if (cols.isEmpty) allNames.indices
-      else {
-        val keep = allNames.zipWithIndex.filter { case (nm, _) =>
-          cols.contains(nm.split(Sep, 2)(0))
-        }
-        require(keep.nonEmpty, s"no requested column among $cols in table schema")
-        keep.map(_._2)
-      }
-    val attrs = selected.map(i =>
-      org.apache.spark.sql.catalyst.expressions.AttributeReference(
-        allNames(i), parseType(allTypes(i)), nullable = true)())
-    graft.plans.GraftPlans.install(spark)
-    val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
-    val projected = df.select(
-      (Seq("num_rows", "chunk_id", "col_crcs") ++ selected.map(i => s"bin_$i")).map(fcol): _*)
-    val flat = bridge.ofRows(spark, graft.plans.DecodeGenericChunks(
-      attrs, selected, selected.map(allTypes(_)), bridge.analyzedPlan(projected)))
-    if (attrs.exists(_.name.contains(Sep))) unflatten(flat) else flat
+    df.select("col_names", "col_types").limit(1).collect().headOption
+      .map(h => decodePlan(df, h.getSeq[String](0), h.getSeq[String](1), cols,
+        i => fcol(s"bin_$i")))
+      .getOrElse(spark.emptyDataFrame)
   }
 
   // ---------------------------------------------------------------- decode
@@ -1154,9 +1119,11 @@ object GenericEncode {
     * the chunks themselves — the reader needs no side channel; struct
     * nesting rebuilds from the flattened leaf names). `cols` restricts
     * the decode to those TOP-LEVEL columns: skipped columns are never
-    * CRC'd or decoded (their bytes still ride in the chunk row — the
-    * per-column byte layout inside one parquet array column is the
-    * documented trade-off of the generic format).
+    * CRC'd or decoded. The in-memory `cols_bin` array is projected to
+    * one `bin_<i>` column per engine column first — the layout
+    * [[writeColumnar]] persists — so the decode plan is the same one
+    * [[readTable]] builds (their bytes still ride in the chunk row here;
+    * only a persisted columnar table skips them at the parquet layer).
     *
     * The scan is COLUMNAR: a custom Catalyst plan
     * (plans.DecodeGenericChunksExec) decodes each chunk column straight
@@ -1165,29 +1132,54 @@ object GenericEncode {
     * rule family as the token pipeline's decodeDF). Every read column's
     * CRC is verified per chunk. */
   def decode(spark: SparkSession, chunks: Dataset[GenericChunk],
-             cols: Seq[String] = Seq.empty): DataFrame = {
-    val meta = metaHead(chunks)
-    if (meta.isEmpty) return spark.emptyDataFrame
-    val (allNames, allTypes) = meta.get
-    val selected: Seq[Int] =
-      if (cols.isEmpty) allNames.indices
-      else {
-        val keep = allNames.zipWithIndex.filter { case (n, _) =>
-          cols.contains(n.split(Sep, 2)(0))
-        }
-        require(keep.nonEmpty, s"no requested column among $cols in table schema")
-        keep.map(_._2)
-      }
-    val attrs = selected.map(i =>
-      org.apache.spark.sql.catalyst.expressions.AttributeReference(
-        allNames(i), parseType(allTypes(i)), nullable = true)())
+             cols: Seq[String] = Seq.empty): DataFrame =
+    metaHead(chunks)
+      .map { case (names, types) => decodePlan(chunks.toDF(), names, types, cols, arrayBin) }
+      .getOrElse(spark.emptyDataFrame)
+
+  /** Payload of engine column `i` in an in-memory chunk dataset. */
+  private val arrayBin: Int => org.apache.spark.sql.Column = i => fcol("cols_bin").getItem(i)
+
+  /** The one generic decode plan: `DecodeGenericChunks` over the
+    * selected columns of `table`, whose column `i` payload is `bin(i)`. */
+  private def decodePlan(table: DataFrame, allNames: Seq[String], allTypes: Seq[String],
+                         cols: Seq[String],
+                         bin: Int => org.apache.spark.sql.Column): DataFrame = {
+    val spark = table.sparkSession
+    val selected = selectedColumns(allNames, cols)
     graft.plans.GraftPlans.install(spark)
     val bridge = org.apache.spark.sql.graftbridge.ColumnBridge
-    val projected = chunks.toDF().select("num_rows", "chunk_id", "col_crcs", "cols_bin")
-    val flat = bridge.ofRows(spark, graft.plans.DecodeGenericChunks(
-      attrs, selected, selected.map(allTypes(_)), bridge.analyzedPlan(projected)))
-    if (attrs.exists(_.name.contains(Sep))) unflatten(flat) else flat
+    val projected = binColumns(table, selected, bin)
+    restoreNesting(bridge.ofRows(spark, graft.plans.DecodeGenericChunks(
+      attrsOf(allNames, allTypes, selected), selected, selected.map(allTypes(_)),
+      bridge.analyzedPlan(projected))))
   }
+
+  /** Indices of the engine (flattened) columns under the requested
+    * TOP-LEVEL `cols`; all of them when `cols` is empty. A misspelled
+    * column fails loudly instead of returning zero-column rows. */
+  private def selectedColumns(allNames: Seq[String], cols: Seq[String]): Seq[Int] =
+    if (cols.isEmpty) allNames.indices
+    else {
+      val keep = allNames.indices.filter(i => cols.contains(allNames(i).split(Sep, 2)(0)))
+      require(keep.nonEmpty, s"no requested column among $cols in table schema")
+      keep
+    }
+
+  private def attrsOf(allNames: Seq[String], allTypes: Seq[String],
+                      selected: Seq[Int]): Seq[org.apache.spark.sql.catalyst.expressions.AttributeReference] =
+    selected.map(i =>
+      org.apache.spark.sql.catalyst.expressions.AttributeReference(
+        allNames(i), parseType(allTypes(i)), nullable = true)())
+
+  /** What the generic decoder reads: chunk metadata plus `bin_<i>`. */
+  private def binColumns(table: DataFrame, selected: Seq[Int],
+                         bin: Int => org.apache.spark.sql.Column): DataFrame =
+    table.select(Seq(fcol("num_rows"), fcol("chunk_id"), fcol("col_crcs")) ++
+      selected.map(i => bin(i).as(s"bin_$i")): _*)
+
+  private def restoreNesting(flat: DataFrame): DataFrame =
+    if (flat.columns.exists(_.contains(Sep))) unflatten(flat) else flat
 
   private def parseType(s: String): DataType = s match {
     case "int" => IntegerType
@@ -1209,144 +1201,5 @@ object GenericEncode {
       val Array(p, sc) = dec.stripPrefix("decimal(").stripSuffix(")").split(",")
       DecimalType(p.trim.toInt, sc.trim.toInt)
     case other => throw new IllegalArgumentException(s"generic decode: $other")
-  }
-
-  /** Decode the selected columns of one chunk to InternalRows (Catalyst
-    * values — no java boxing, no Row/RowEncoder round-trip). A full
-    * decode verifies the whole-chunk CRC; a projected decode verifies
-    * the per-column CRCs of only what it reads. */
-  private def decodeChunkInternal(c: GenericChunk, selected: Array[Int],
-                                  full: Boolean): Iterator[InternalRow] = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.unsafe.types.UTF8String
-    if (full) {
-      val crc = new java.util.zip.CRC32()
-      c.cols_bin.foreach(crc.update)
-      c.col_blooms.foreach(crc.update)
-      require(crc.getValue == c.crc32, s"generic chunk ${c.chunk_id}: CRC mismatch")
-    } else {
-      selected.foreach { i =>
-        val crc = new java.util.zip.CRC32()
-        crc.update(c.cols_bin(i))
-        require(crc.getValue == c.col_crcs(i),
-          s"generic chunk ${c.chunk_id}: column ${c.col_names(i)} CRC mismatch")
-      }
-    }
-    val nSel = selected.length
-    val cols = new Array[Array[Any]](nSel)
-    var si = 0
-    while (si < nSel) {
-      val ci = selected(si)
-      val (flags, inner) = Chunks.unwrapNullable(c.cols_bin(ci))
-      val dense: Array[Any] = c.col_types(ci) match {
-        case "int" | "date" => Chunks.decodeInts(inner).map(v => v: Any)
-        case "bigint" | "timestamp" | "timestamp_ntz" =>
-          Chunks.decodeLongs(inner).map(v => v: Any)
-        case "double" => Chunks.decodeDoubles(inner).map(v => v: Any)
-        case "float" => Chunks.decodeFloats(inner).map(v => v: Any)
-        case dec if dec.startsWith("decimal(") =>
-          val dt = parseType(dec).asInstanceOf[DecimalType]
-          Chunks.decodeLongs(inner)
-            .map(u => org.apache.spark.sql.types.Decimal
-              .createUnsafe(u, dt.precision, dt.scale): Any)
-        case "boolean" => Chunks.decodeBooleans(inner).map(v => v: Any)
-        case "string" => Chunks.decodeStrings(inner).map(b => UTF8String.fromBytes(b): Any)
-        case "binary" => Chunks.decodeStrings(inner).map(b => b: Any)
-        case t if t.startsWith("array<") =>
-          val r = new ByteReader(inner)
-          val lensLen = r.readUvarint().toInt
-          val lens = Chunks.decodeInts(r.readBytes(lensLen))
-          val rest = java.util.Arrays.copyOfRange(r.buf, r.pos, r.buf.length)
-          // element stream: dense values directly, or dense values inside
-          // a NULLABLE wrapper whose bitmap spans ALL elements
-          val (ef, denseBin) = Chunks.unwrapNullable(rest)
-          def slices(mk: (Int, Int) => Any): Array[Any] = {
-            val out = new Array[Any](lens.length)
-            var off = 0
-            var i = 0
-            while (i < lens.length) { out(i) = mk(off, lens(i)); off += lens(i); i += 1 }
-            out
-          }
-          if (ef == null) t match {
-            case "array<int>" =>
-              val flat = StreamedTokens.decode(denseBin, lens)
-              slices((off, n) => UnsafeArrayData.fromPrimitiveArray(
-                java.util.Arrays.copyOfRange(flat, off, off + n)))
-            case "array<bigint>" =>
-              val flat = Chunks.decodeLongs(denseBin)
-              slices((off, n) => UnsafeArrayData.fromPrimitiveArray(
-                java.util.Arrays.copyOfRange(flat, off, off + n)))
-            case "array<float>" =>
-              val flat = Chunks.decodeFloats(denseBin)
-              slices((off, n) => UnsafeArrayData.fromPrimitiveArray(
-                java.util.Arrays.copyOfRange(flat, off, off + n)))
-            case "array<double>" =>
-              val flat = Chunks.decodeDoubles(denseBin)
-              slices((off, n) => UnsafeArrayData.fromPrimitiveArray(
-                java.util.Arrays.copyOfRange(flat, off, off + n)))
-            case "array<string>" =>
-              val flat = Chunks.decodeStrings(denseBin)
-              slices { (off, n) =>
-                val a = new Array[Any](n)
-                var k = 0
-                while (k < n) { a(k) = UTF8String.fromBytes(flat(off + k)); k += 1 }
-                new GenericArrayData(a)
-              }
-            case other => throw new IllegalArgumentException(s"generic decode: $other")
-          } else {
-            val dense: Int => Any = t match {
-              case "array<int>" =>
-                val a = Chunks.decodeInts(denseBin); k => a(k)
-              case "array<bigint>" =>
-                val a = Chunks.decodeLongs(denseBin); k => a(k)
-              case "array<float>" =>
-                val a = Chunks.decodeFloats(denseBin); k => a(k)
-              case "array<double>" =>
-                val a = Chunks.decodeDoubles(denseBin); k => a(k)
-              case "array<string>" =>
-                val a = Chunks.decodeStrings(denseBin); k => UTF8String.fromBytes(a(k))
-              case other => throw new IllegalArgumentException(s"generic decode: $other")
-            }
-            val out = new Array[Any](lens.length)
-            var e = 0
-            var d2 = 0
-            var i = 0
-            while (i < lens.length) {
-              val a = new Array[Any](lens(i))
-              var k = 0
-              while (k < lens(i)) {
-                if (ef(e)) a(k) = null else { a(k) = dense(d2); d2 += 1 }
-                e += 1
-                k += 1
-              }
-              out(i) = new GenericArrayData(a)
-              i += 1
-            }
-            out
-          }
-        case other => throw new IllegalArgumentException(s"generic decode: $other")
-      }
-      cols(si) =
-        if (flags == null) dense
-        else {
-          val out = new Array[Any](c.num_rows)
-          var d = 0
-          var i = 0
-          while (i < c.num_rows) {
-            if (!flags(i)) { out(i) = dense(d); d += 1 }
-            i += 1
-          }
-          out
-        }
-      si += 1
-    }
-    Iterator.tabulate(c.num_rows) { r =>
-      val vals = new Array[Any](nSel)
-      var k = 0
-      while (k < nSel) { vals(k) = cols(k)(r); k += 1 }
-      new GenericInternalRow(vals): InternalRow
-    }
   }
 }

@@ -429,8 +429,10 @@ object SnapshotLog {
       .write.mode("overwrite").parquet(s"$dir/$sub")
     val matched = obs.get("n").asInstanceOf[Long]
     val (hfs, root) = fs(spark, dir)
-    if (matched == 0L) { // no empty commits
-      hfs.delete(new Path(root, sub), true)
+    if (matched == 0L) { // no empty commits, and no stray delete dir
+      val empty = new Path(root, sub)
+      if (!hfs.delete(empty, true) && hfs.exists(empty))
+        throw new java.io.IOException(s"could not remove empty delete dir $empty")
       return cur
     }
     val written = listParquet(hfs, root, sub).keys.toSeq.sorted

@@ -32,7 +32,8 @@ class GenericArraySpec extends AnyFunSuite {
     assert(r.getSeq[Long](1) ==
       Seq(2999L * 1000000000L, 2999L * -7L, Long.MaxValue - 2999L))
     assert(r.getSeq[Double](2) == Seq(2999 * 0.5, math.Pi * 2999, Double.MinPositiveValue))
-    // row path (seekRows decodes through decodeChunkInternal)
+    // seek path (seekRows decodes a row window of each covering chunk
+    // through the columnar iterator)
     val seek = GenericEncode.seekRows(spark,
       GenericEncode.encode(df, rowsPerChunk = 512), 1000, 5)
       .collect().sortBy(_.getInt(0))
@@ -76,7 +77,7 @@ class GenericArraySpec extends AnyFunSuite {
     // full-table parity with the source (null-safe)
     val diff = back.exceptAll(df).count() + df.exceptAll(back).count()
     assert(diff == 0, s"$diff rows differ after round-trip")
-    // row path too
+    // windowed seek path too
     val seek = GenericEncode.seekRows(spark,
       GenericEncode.encode(df, rowsPerChunk = 256), 0, 1)
       .collect()

@@ -126,6 +126,18 @@ class GenericStatsSpec extends AnyFunSuite {
     assert(messages(ex).exists(_.contains("CRC mismatch")), ex.toString)
   }
 
+  test("seekRows CRC-checks the columns it reads") {
+    import spark.implicits._
+    val corrupted = chunks.map(c => c.copy(cols_bin = c.cols_bin.updated(1, Array[Byte](1, 2, 3))))
+    assert(GenericEncode.seekRows(spark, corrupted, 600, 5, Seq("k", "name")).count() == 5)
+    val ex = intercept[Exception] {
+      GenericEncode.seekRows(spark, corrupted, 600, 5, Seq("v")).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
+    assert(messages(ex).exists(_.contains("column v CRC mismatch")), ex.toString)
+  }
+
   test("generic decode is columnar and prunes automatically") {
     import spark.implicits._
     val df = GenericEncode.decode(spark, chunks)
@@ -298,7 +310,8 @@ class GenericStatsSpec extends AnyFunSuite {
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
     assert(messages(ex).exists(_.contains("bloom filter CRC mismatch")), ex.toString)
-    // legacy headerless filters (pre-round-5 tables) still probe, unverified
+    // a filter without the magic-plus-CRC header is unrecognized: it
+    // cannot prune, so every probe answers "might contain"
     val legacyBloom = {
       val words = new Array[Int](16)
       graft.codec.Bloom.insert(words, 42)

@@ -196,9 +196,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       b(b.length / 2) = (b(b.length / 2) ^ 0x40).toByte
       b
     })
-    val ex = intercept[Exception](EncodePipeline.decodeChunk(corrupted).toArray)
-    assert(ex.getMessage.contains("CRC"), ex.getMessage)
+    val ex = intercept[Exception](
+      EncodePipeline.decode(spark.createDataset(Seq(corrupted))).collect())
+    assert(messages(ex).exists(_.contains("CRC")), ex.getMessage)
   }
+
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
 
   test("compaction merges incremental chunk tables into one layout") {
     import spark.implicits._
@@ -492,9 +496,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val src = TokenTableGen.generate(spark, 4000, 4)
     val chunks = EncodePipeline.encode(src, 4, tokensPerChunk = 1 << 20).cache()
-    // canonical order reference: full decode sorted by (part_id, chunk, row)
-    val metas = chunks.collect().sortBy(c => (c.part_id, c.chunk_id))
-    val fullOrdered = metas.flatMap(c => EncodePipeline.decodeChunk(c).toSeq)
+    // canonical order (part_id, chunk, row) is global doc_id order: parts
+    // are doc_id ranges, sorted within
+    val fullOrdered = src.collect().sortBy(_.doc_id)
     for (start <- Seq(0L, 17L, 1999L, 3990L)) {
       val got = EncodePipeline.seekToRows(chunks, start, 10).collect()
         .sortBy(_.doc_id)
@@ -515,6 +519,20 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(total >= 8, s"chunk too small to evidence skipping: $total pages")
     assert(decoded * 2 <= total, s"decoded $decoded of $total pages")
     chunks.unpersist()
+  }
+
+  test("seekToRows fails loudly on a corrupted stream of a covering chunk") {
+    import spark.implicits._
+    val chunk = EncodePipeline.encode(TokenTableGen.generate(spark, 300, 1), 1)
+      .collect()(0)
+    val corrupted = chunk.copy(source_bin = {
+      val b = chunk.source_bin.clone()
+      b(b.length - 1) = (b(b.length - 1) ^ 0x01).toByte
+      b
+    })
+    val ex = intercept[Exception](
+      EncodePipeline.seekToRows(spark.createDataset(Seq(corrupted)), 100, 5).collect())
+    assert(messages(ex).exists(_.contains("source stream CRC mismatch")), ex.getMessage)
   }
 
   test("rowIndex: distributed prefix sums match the canonical order; persisted index works") {

@@ -12,16 +12,18 @@ import org.scalatest.funsuite.AnyFunSuite
 class ProjectionSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  private lazy val chunks = {
-    val src = TokenTableGen.generate(spark, 3000, 4)
+  private lazy val src = TokenTableGen.generate(spark, 3000, 4)
+  private lazy val chunks =
     EncodePipeline.encode(src, numParts = 4, tokensPerChunk = 64 * 1024).cache()
-  }
 
   test("columnar decodeDF matches typed decode exactly (all columns)") {
     import spark.implicits._
-    val typed = EncodePipeline.decode(chunks).collect()
-      .map(r => (r.doc_id, Option(r.tokens).map(_.toSeq), r.n_tok, Option(r.source)))
-      .sortBy(_._1)
+    def norm(rows: Array[TokenRow]) =
+      rows.map(r => (r.doc_id, Option(r.tokens).map(_.toSeq), r.n_tok, Option(r.source)))
+        .sortBy(_._1)
+    // typed decode rides decodeDF too, so both answer to the source rows
+    val typed = norm(EncodePipeline.decode(chunks).collect())
+    assert(typed.toSeq == norm(src.collect()).toSeq)
     val df = EncodePipeline.decodeDF(chunks)
       .as[(String, Option[Seq[Int]], Int, Option[String])].collect().sortBy(_._1)
     assert(df.toSeq == typed.toSeq)

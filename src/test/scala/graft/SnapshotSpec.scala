@@ -145,9 +145,10 @@ class SnapshotSpec extends AnyFunSuite {
       .map(_.doc_id).collect().toSet == all)
     assert(SnapshotLog.snapshot(spark, dir, v2).files ==
       SnapshotLog.snapshot(spark, dir, v1).files) // no data file rewritten
-    // a no-match delete commits nothing
+    // a no-match delete commits nothing and leaves no delete dir behind
     assert(SnapshotLog.deleteWhere(spark, dir,
       col("doc_id") === "no-such-id") == v2)
+    assert(new java.io.File(s"$dir/_deletes").list().toSet == Set(f"d-v$v1%05d"))
   }
 
   test("compaction applies deletes, dedupes, and commits a rewrite") {

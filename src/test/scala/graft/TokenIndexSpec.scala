@@ -51,10 +51,15 @@ class TokenIndexSpec extends AnyFunSuite {
       .select(explode(col("chunk_ids")).as("chunk_id"))
       .as[Long].collect().toSet
     assert(listed.nonEmpty)
-    val containing = chunks.collect()
-      .filter(c => EncodePipeline.decodeChunk(c)
-        .exists(r => r.tokens != null && r.tokens.contains(tok)))
-      .map(_.chunk_id).toSet
+    // chunks hold disjoint [first_doc_id, last_doc_id] ranges: map each
+    // matching row back to its chunk by key
+    val ranges = chunks.select("chunk_id", "first_doc_id", "last_doc_id")
+      .as[(Long, String, String)].collect()
+    val containing = EncodePipeline.decode(chunks)
+      .filter(r => r.tokens != null && r.tokens.contains(tok))
+      .map(_.doc_id).collect()
+      .map(d => ranges.find { case (_, lo, hi) => lo <= d && d <= hi }.get._1)
+      .toSet
     assert(listed == containing)
   }
 
